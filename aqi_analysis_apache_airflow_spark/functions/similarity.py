@@ -1,10 +1,9 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force exact cosine is the baseline (and the oracle); the LSH
-variant is the 100 TB path: random-hyperplane signatures bucket the
-vectors so the candidate join touches a small fraction of the corpus.
-Hyperplanes are derived from xxhash64(dim, plane) — deterministic, no
-driver-side randomness to broadcast.
+Brute-force exact cosine is the baseline (and the oracle); the IVF
+probes are the approximate search path. Random-hyperplane LSH over the
+full corpus is the oracle-backed ``rp1_hyperplane_lsh`` query
+(``plans/extended.py``).
 """
 
 from __future__ import annotations
@@ -130,69 +129,6 @@ def brute_force_topk(
         scored.filter(F.col("cosine_sim").isNotNull())
         .orderBy(F.col("cosine_sim").desc(), id_col)
         .limit(k)
-    )
-
-
-def hyperplane_signature(vec: Column, n_planes: int = 16) -> Column:
-    """Random-hyperplane LSH signature as an int bitmask.
-
-    Plane p's component for dimension d is ±1 from the parity of
-    xxhash64(d, p) — a data-independent, reproducible hyperplane
-    family. sign(v·h_p) becomes bit p. Cosine-similar vectors agree on
-    most bits, so bucketing by the signature (or by its bands) turns
-    the quadratic all-pairs problem into per-bucket joins.
-    """
-    dims = F.sequence(F.lit(0), F.size(vec) - 1)
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    dims,
-                    lambda x, d: F.when(
-                        F.xxhash64(d, F.lit(p)).bitwiseAND(F.lit(1)) == 1,
-                        x.cast("double"),
-                    ).otherwise(-x.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit(1 << p),
-        ).otherwise(F.lit(0))
-        for p in range(n_planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("int")
-
-
-def lsh_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.85,
-    n_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate near-duplicate pairs: bucket by full hyperplane
-    signature, join within buckets, verify with exact cosine. Recall
-    is tunable via n_planes (fewer planes → bigger buckets → higher
-    recall, more verify work)."""
-    sig = emb.select(
-        F.col(id_col), F.col(vec_col), hyperplane_signature(F.col(vec_col), n_planes).alias("sig")
-    )
-    a = sig.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "sig"
-    )
-    b = sig.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), "sig"
-    )
-    return (
-        a.join(b, "sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("vec_a"), F.col("vec_b")).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
     )
 
 

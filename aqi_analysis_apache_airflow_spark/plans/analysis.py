@@ -841,14 +841,14 @@ def jsd1_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     nad = F.col("na").cast("double")
     nbd = F.col("nb").cast("double")
     mix = cad * nbd + cbd * nad
-    pin = lambda x: F.round(F.round(F.log(x), 6) * 1e6).cast(  # noqa: E731
+    log_micro = lambda x: F.round(F.round(F.log(x), 6) * 1e6).cast(  # noqa: E731
         "decimal(38,0)"
     )
     terms = grid.join(F.broadcast(tots), "source").select(
         "source",
-        (F.col("ca").cast("decimal(38,0)") * pin(2 * cad * nbd / mix))
+        (F.col("ca").cast("decimal(38,0)") * log_micro(2 * cad * nbd / mix))
         .alias("n1"),
-        (F.col("cb").cast("decimal(38,0)") * pin(2 * cbd * nad / mix))
+        (F.col("cb").cast("decimal(38,0)") * log_micro(2 * cbd * nad / mix))
         .alias("n2"),
         "na",
         "nb",

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.materialize import pin, pin_over_persist
+from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from .registry import load, load_spread, query
 
@@ -1210,23 +1210,21 @@ def sp1_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = visited.select("node")
     for depth in range(1, _SP_MAX_DEPTH + 1):
-        # r14: localCheckpoint (flag-swappable to the pre-r14 persist)
-        # for the per-round handover — persist materializes but keeps
-        # the whole union-chain lineage alive (386 scans at explain),
-        # re-analyzed every round (A/B tools/ab_r14_swap.json)
-        nxt = pin_over_persist(
+        # localCheckpoint, not persist, for the per-round handover —
+        # persist materializes but keeps the whole union-chain lineage
+        # alive (386 scans at explain), re-analyzed every round (A/B
+        # tools/ab_r14_swap.json)
+        nxt = pin(
             frontier.join(edges, frontier["node"] == edges["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
         )
         if nxt.isEmpty():
-            nxt.unpersist()
             break
-        nv = pin_over_persist(
-            visited.unionAll(nxt.withColumn("dist", F.lit(depth)))
-        )
+        nv = pin(visited.unionAll(nxt.withColumn("dist", F.lit(depth))))
         nv.count()  # materialize before releasing the parent cache
+        # frees the seed's real persist in round 1; no-op on checkpoints
         visited.unpersist()
         visited = nv
         frontier = nxt.select("node")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.materialize import pin, pin_over_persist
+from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from ..functions.graph import (
     dim_broadcast_gate,
@@ -1159,11 +1159,10 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(_MMR_POOL)
     )
-    # r14: localCheckpoint (flag-swappable to the pre-r14 persist)
-    # instead of persist for the three materialized stages — persist
-    # kept the 404-scan/5639-line lineage alive through every greedy
-    # round's re-analysis (A/B tools/ab_r14_swap.json)
-    pool = pin_over_persist(pool)
+    # localCheckpoint, not persist, for the three materialized stages —
+    # persist kept the 404-scan/5639-line lineage alive through every
+    # greedy round's re-analysis (A/B tools/ab_r14_swap.json)
+    pool = pin(pool)
     pa = pool.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea")
     )
@@ -1174,7 +1173,7 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pa.join(pb, F.col("va") != F.col("vb"))
         .select("va", "vb", cosine(F.col("ea"), F.col("eb")).alias("s"))
     )
-    pp = pin_over_persist(pp)
+    pp = pin(pp)
     sel = (
         pool.orderBy(F.col("rel").desc(), "vec_id")
         .limit(1)
@@ -1234,7 +1233,7 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nested lambdas at this depth. The in-plan join form stays:
         # ~1s/round scheduling floor at sf0.1, constant-bounded (pool
         # ≤20 rows) and independent of corpus size at 100 TB.
-        sel = pin_over_persist(sel.unionAll(win))
+        sel = pin(sel.unionAll(win))
     lamc = F.lit(_MMR_LAM)
     return sel.select(
         "vec_id",

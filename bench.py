@@ -128,13 +128,14 @@ Mover-rule enforcement record (the dated notes the rule requires):
   0.92-1.07) measures hits1 at 2.78s = 0.98x its frozen REF —
   cleared, no code change warranted. The same run's movers15=2 were
   exactly the dated gof1/iqr1 plan-trade rows above; both rows (and
-  the q1 canary reference) are refreshed by the r14 REF re-freeze.
-- 2026-08-18 (r14): BENCH_REF.json re-frozen as the per-query
-  geometric mean of the round's two post-change canonical runs
-  (freeze_bench_ref --refreeze; the methodology field carries both
-  run stamps), and _CANARY_REF_S updated from the same two runs —
-  closing the r13 note above (box_state no longer reads ~15%
-  optimistic against a stale q1 row).
+  the q1 canary reference) wait on the next REF re-freeze.
+- 2026-08-18 (r14): NOT shipped — BENCH_REF.json was not re-frozen
+  and _CANARY_REF_S was not refreshed (the REF rows are still the
+  2026-08-16/17 freeze and the canary still 0.94 s, both measured at
+  32 cores). Both wait on a re-freeze from two canonical runs on
+  the SAME core count as the runs they judge (freeze_bench_ref
+  --refreeze); until then the r13 note above stands (box_state
+  reads ~15% optimistic against a stale q1 row).
 
 Single cross-JVM runs on this box swing ~±5% run-to-run (measured
 with identical configs back-to-back); one-query conclusions need
@@ -656,7 +657,9 @@ def _warmup(spark, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
 
 
-def _time_query(spark, sf_dir: str, name: str) -> float:
+def time_query(spark, sf_dir: str, name: str) -> float:
+    """The one timed region: clear the session cache, then build the
+    registry query and force it through the noop writer."""
     from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 
     q = REGISTRY[name]
@@ -669,7 +672,7 @@ def _time_query(spark, sf_dir: str, name: str) -> float:
 def _canary_median(spark, sf_dir: str) -> float:
     xs: list[float] = []
     for pass_no in range(4):  # pass 0 = uncounted warmup
-        dt = _time_query(spark, sf_dir, _CANARY_NAME)
+        dt = time_query(spark, sf_dir, _CANARY_NAME)
         if pass_no > 0:
             xs.append(dt)
     return median(xs)
@@ -716,7 +719,7 @@ def _measure(
     samples: dict[str, list[float]] = {n: [] for n in names}
     for pass_no in range(n_passes + 1):  # pass 0 = uncounted warmup
         for name in names:
-            dt = _time_query(spark, sf_dir, name)
+            dt = time_query(spark, sf_dir, name)
             if pass_no > 0:
                 samples[name].append(dt)
     if n_passes > 1:
@@ -725,7 +728,7 @@ def _measure(
             if not noisy:
                 break
             for name in noisy:
-                samples[name].append(_time_query(spark, sf_dir, name))
+                samples[name].append(time_query(spark, sf_dir, name))
     return samples
 
 
@@ -745,20 +748,15 @@ def _measure_dc3_twin(spark, sf_dir: str) -> float:
     """dc3 IVF-prefilter twin (verdict r8 task 5): flag-gated path,
     correctness-tested in tests/test_dc3_prefilter.py, timed here so
     the 10k-probe scenario's claimed win stays a number, not prose."""
-    from aqi_analysis_apache_airflow_spark.plans import REGISTRY
-
     _DC3_FLAG = "spark.graft.dc3.ivfPrefilter"
-    dc3 = REGISTRY["dc3_semantic_decontamination"]
     _dc3_prior = spark.conf.get(_DC3_FLAG, None)
     xs: list[float] = []
     try:
         spark.conf.set(_DC3_FLAG, "true")
         for pass_no in range(3):  # warmup + 2 counted
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            dc3.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time_query(spark, sf_dir, "dc3_semantic_decontamination")
             if pass_no > 0:
-                xs.append(time.perf_counter() - t0)
+                xs.append(dt)
     finally:
         # restore the PRIOR state, don't pin "false" (ADVICE r9)
         if _dc3_prior is None:

@@ -22,7 +22,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
@@ -58,20 +57,17 @@ SCALES = [
 def _run_scale(label: str, sf_dir: str, out_path: str) -> None:
     """Child: one fresh JVM per scale so large-scale GC/JIT state never
     bleeds into the next scale's numbers."""
-    from aqi_analysis_apache_airflow_spark.plans import REGISTRY
     from aqi_analysis_apache_airflow_spark.session import get_spark
+    from bench import time_query
 
     spark = get_spark(app_name=f"scaling-{label}")
     res: dict[str, float] = {}
     for name in QUERIES:
-        q = REGISTRY[name]
         xs = []
         for pass_no in range(4):  # pass 0 = uncounted warmup
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = time_query(spark, sf_dir, name)
             if pass_no > 0:
-                xs.append(time.perf_counter() - t0)
+                xs.append(dt)
         xs.sort()
         res[name] = round(xs[1], 4)  # median of 3
         print(label, name, res[name], flush=True)
